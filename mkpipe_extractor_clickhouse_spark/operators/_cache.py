@@ -35,13 +35,16 @@ from pyspark.sql import DataFrame
 def ephemeral_cache(df: DataFrame, *, required: bool = False) -> DataFrame:
     """Cache-like reuse whose storage is freed by GC, not unpersist().
 
-    ``required=True`` marks CORRECTNESS pins (e.g. freezing a
-    monotonically_increasing_id mapping so two subtree re-evaluations
-    cannot mint different ids) — those always materialize.  Plain
-    perf pins honor ``SPARK_GRAFT_NO_PIN=1`` and become identity, the
-    control arm for one-shot A/B measurements (scripts/exp_pin_ab.py):
-    an eager checkpoint moves compute to DataFrame build time, so only
-    a rebuild+execute timing can tell whether a pin actually pays."""
+    ``required=True`` marks pins that always materialize: CORRECTNESS
+    pins (e.g. freezing a monotonically_increasing_id mapping so two
+    subtree re-evaluations cannot mint different ids) and LINEAGE
+    bounds of iterative loops (e.g. one pin per connected-components
+    round — unpinned, round r re-runs every earlier round, so the
+    loop has no A/B control arm to offer).  Plain perf pins honor
+    ``SPARK_GRAFT_NO_PIN=1`` and become identity, the control arm for
+    one-shot A/B measurements (scripts/exp_pin_ab.py): an eager
+    checkpoint moves compute to DataFrame build time, so only a
+    rebuild+execute timing can tell whether a pin actually pays."""
     if not required and os.environ.get("SPARK_GRAFT_NO_PIN") == "1":
         return df
     return df.localCheckpoint(eager=True)

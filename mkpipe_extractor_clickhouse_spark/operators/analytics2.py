@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
+from ._cache import ephemeral_cache
 from ._determinism import DAVG, DSUM, _Q, _quantize, davg, dsum
 
 
@@ -223,7 +224,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q15: supplier(s) with the maximum quarterly revenue — the
     view-plus-scalar-subquery query. The revenue CTE is materialized
-    once (localCheckpoint) and its MAX comes back as a one-row
+    once (an eager ephemeral_cache pin) and its MAX comes back as a one-row
     broadcast cross join — not a global window, which would funnel
     every supplier's aggregate through a single partition; quantized
     sums make the = MAX comparison exact, so ties surface
@@ -240,7 +241,9 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_revenue"
         )
     )
-    rev = rev.localCheckpoint(eager=False)  # reuse for max without re-agg
+    # pinned: the max and the join would each re-aggregate lineitem —
+    # the two branches' filters block exchange reuse
+    rev = ephemeral_cache(rev)
     max_rev = rev.agg(F.max("total_revenue").alias("_max_rev"))
     best = rev.join(F.broadcast(max_rev)).filter(
         F.col("total_revenue") == F.col("_max_rev")
@@ -457,7 +460,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("l_partkey").alias("ps_partkey"))
         .agg(dsum(F.col("p_retailprice") * F.col("l_quantity")).alias("value"))
     )
-    val = val.localCheckpoint(eager=False)  # reuse for total without re-scan
+    val = ephemeral_cache(val)  # reuse for total without re-scan
     total = val.agg(dsum("value").alias("_total"))
     return (
         val.join(F.broadcast(total))

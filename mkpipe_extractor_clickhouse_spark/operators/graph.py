@@ -10,14 +10,16 @@ tests/test_llm.py.
 
 Each round is two grouped-min + join passes over the edge set — plain
 shuffles on node ids, no driver-side state beyond the convergence
-check.  localCheckpoint truncates the iterative lineage (same pattern
-as kmeans_fit / the old propagation loop).
+check.  A required pin (ephemeral_cache) truncates the iterative
+lineage every round.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ._cache import ephemeral_cache
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -70,16 +72,16 @@ def connected_components(
     fixed point (a union of stars centered on component minima) —
     provably O(log² n) rounds, so deep-diameter chains converge where
     label propagation would need diameter rounds."""
-    edges = (
-        edges.select("u", "v")
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    edges = ephemeral_cache(
+        edges.select("u", "v").filter(F.col("u") != F.col("v")).distinct(),
+        required=True,
     )
     n_edges = edges.count()
     converged = False
     for _ in range(max_rounds):
-        after = _small_star(_large_star(edges)).localCheckpoint(eager=True)
+        after = ephemeral_cache(
+            _small_star(_large_star(edges)), required=True
+        )
         n_after = after.count()
         # fixed point ⇔ same edge set. Both sides are DISTINCT sets
         # (stars end in .distinct()), so equal counts + empty anti-join

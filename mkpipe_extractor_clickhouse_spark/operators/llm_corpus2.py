@@ -1,7 +1,6 @@
 """Round-10 corpus-analytics operators: vocabulary-growth law, split
 n-gram coverage, per-source distribution divergence, span-corruption
-planning, quality-prune tuning, Benford data-quality audit,
-matryoshka-truncation fidelity, and supervised Fellegi-Sunter weights.
+planning, quality-prune tuning, matryoshka-truncation fidelity, and supervised Fellegi-Sunter weights.
 
 Reference parity: these extend the training-data-pipeline surface the
 reference's extract stage feeds (mkpipe-extractor-clickhouse exposes
@@ -409,62 +408,6 @@ def l123_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("source")
     )
 
-
-# ---- dq13: Benford first-digit audit ----------------------------------
-
-
-@register(
-    "dq13_benford_audit",
-    oracle="""
-    WITH digits AS (
-      SELECT CAST(SUBSTR(CAST(CAST(FLOOR(o_totalprice) AS BIGINT)
-                          AS VARCHAR), 1, 1) AS BIGINT) AS d
-      FROM orders WHERE o_totalprice >= 1
-    ),
-    n AS (SELECT COUNT(*) AS n FROM digits)
-    SELECT d,
-           COUNT(*) AS n_orders,
-           COUNT(*) * 1000000 // MAX(n.n) AS observed_ppm,
-           CAST(TRUNC(LN(1.0 + 1.0 / d) / LN(10.0) * 1000000 + 0.5)
-                AS BIGINT) AS benford_ppm
-    FROM digits CROSS JOIN n
-    GROUP BY d ORDER BY d
-    """,
-    tags=("EXT", "quality", "A2"),
-)
-def dq13_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford's-law first-digit audit of order totals — the classic
-    fabricated-data screen (auditing, fraud detection, synthetic-data
-    QA): organically-generated magnitudes follow P(d) = log10(1+1/d);
-    uniform or hand-entered values don't. Reports observed vs Benford
-    ppm per leading digit; a reader compares the two columns (TPC-H
-    prices are uniform-ish, so this SHOWS the deviation — the audit's
-    point is measuring it, not asserting conformance). LN chain
-    quantized half-up, identical in both engines.
-
-    Scale shape: one map-side digit extraction + a 9-group aggregate."""
-    o = load_table(spark, sf_dir, "orders")
-    digits = o.filter(F.col("o_totalprice") >= 1).select(
-        F.substring(
-            F.floor("o_totalprice").cast("long").cast("string"), 1, 1
-        )
-        .cast("long")
-        .alias("d")
-    )
-    n = digits.agg(F.count("*").alias("n"))
-    benford = _quantize(
-        F.log(1.0 + 1.0 / F.col("d")) / F.log(F.lit(10.0))
-    )
-    return (
-        digits.crossJoin(F.broadcast(n))
-        .groupBy("d")
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.expr("count(*) * 1000000 div max(n)").alias("observed_ppm"),
-            F.max(benford).alias("benford_ppm"),
-        )
-        .orderBy("d")
-    )
 
 # ---- l121: matryoshka truncation fidelity -----------------------------
 

@@ -32,6 +32,7 @@ from ..catalog import load_table
 from ..registry import register
 from ._cache import ephemeral_cache
 from .graph import connected_components
+from .llm_similarity import _arrow_matrix
 
 JACCARD_T = 0.9
 
@@ -1039,7 +1040,6 @@ def l2d_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # block is bounded by cluster size, which the codebook K controls.
     import numpy as np
     import pyarrow as pa
-    import pyarrow.compute  # noqa: F401 — pa.compute in the worker closure
 
     out_schema = T.StructType(
         [
@@ -1065,27 +1065,14 @@ def l2d_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def block_verify(batches):
-        import pyarrow.compute  # noqa: F401 — runs IN the worker
-
         def unpack(col):
             # col: ListArray<struct<vec_id: long, v: list<double>>>
             offs = np.asarray(col.offsets)
             offs = offs - offs[0]
             members = col.flatten()
             ids = members.field("vec_id").to_numpy(zero_copy_only=False)
-            vv = members.field("v")
-            mm = pa.compute.min_max(pa.compute.list_value_length(vv))
-            if (
-                vv.null_count
-                or mm["min"].as_py() != dim
-                or mm["max"].as_py() != dim
-            ):
-                raise ValueError("ragged/null vector in verify")
-            flat = vv.flatten().to_numpy(zero_copy_only=True)
-            m = flat.reshape(len(members), dim)
-            if m.dtype != np.float64:
-                m = m.astype(np.float64)
-            return offs, ids, m
+            m = _arrow_matrix(members.field("v"), dim)
+            return offs, ids, m.astype(np.float64, copy=False)
 
         for rb in batches:
             if rb.num_rows == 0:
@@ -1174,10 +1161,8 @@ def l18_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     reachability, so the iterative result is verified exactly."""
     # checkpoint: the Jaccard join is the dominant cost and feeds two
     # union branches — without this it executes twice
-    pairs = (
-        l2_jaccard_neardup(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
+    pairs = ephemeral_cache(
+        l2_jaccard_neardup(spark, sf_dir).select("doc_a", "doc_b")
     )
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("id")
@@ -1350,7 +1335,6 @@ def l32_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # integer fold exactly, as before.
     import numpy as np
     import pyarrow as pa
-    import pyarrow.compute  # noqa: F401 — pa.compute in the worker closure
 
     # numeric-only kernel I/O: strings through the Arrow output hit
     # Spark's ArrowColumnVector getUTF8String gap; the label rejoins
@@ -1365,25 +1349,13 @@ def l32_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     thr = SEMDEDUP_T
 
     def verify_pairs(batches):
-        import pyarrow.compute  # noqa: F401 — runs IN the worker
-
         for rb in batches:
             n = rb.num_rows
             if n == 0:
                 continue
 
             def mat(col):
-                mm = pa.compute.min_max(pa.compute.list_value_length(col))
-                if (
-                    col.null_count
-                    or mm["min"].as_py() != dim
-                    or mm["max"].as_py() != dim
-                ):
-                    raise ValueError("ragged/null vector in verify")
-                m = col.flatten().to_numpy(zero_copy_only=True).reshape(
-                    n, dim
-                )
-                return m if m.dtype == np.float64 else m.astype(np.float64)
+                return _arrow_matrix(col, dim).astype(np.float64, copy=False)
 
             p = mat(rb.column(1)) * mat(rb.column(2))
             q = np.trunc(p * 1e12 + np.copysign(0.5, p))

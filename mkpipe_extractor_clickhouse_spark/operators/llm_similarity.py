@@ -5,16 +5,16 @@ REPOSE/ICDE'21 pattern per PAPERS.md), label centroids,
 nearest-centroid assignment, and an IVF-bucketed ANN scale path.
 
 Vector math is higher-order array built-ins (zip_with / aggregate) —
-JVM-side, codegen'd — except the partition-local heap (l4), which is a
-mapInPandas with NumPy dot products (Arrow-batched, the sanctioned
-slow path for per-partition imperative logic).
+JVM-side, codegen'd — except the mapInArrow NumPy kernels, which
+decode list<float|double> vector columns only through _arrow_matrix.
 """
 
 from __future__ import annotations
 
+import sys
 from typing import Iterator
 
-import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -23,6 +23,13 @@ from ..catalog import load_table
 from ..registry import register
 from ._cache import ephemeral_cache
 from ._determinism import DAVG9, DSUM, _Q, _Q9, _quantize, _quantize9, davg9
+
+# The mapInArrow kernels here and in llm_dedup call this module's
+# helpers (_arrow_matrix, _topk_batches, _nearest_centroid) inside the
+# Python workers. Ship them by value, like the kernel closures
+# themselves, so a worker never has to import this package: its
+# working directory need not be the repository root.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 TOP_K = 10
 QUERY_VEC_ID = 0
@@ -129,6 +136,75 @@ _TOPK_SCHEMA = T.StructType(
 )
 
 
+def _arrow_matrix(col, dim: int):
+    """The one Arrow-to-NumPy boundary of the vector kernels: the
+    ``list<float|double>`` array ``col`` as an (n, dim) ndarray over
+    its flat values buffer — a zero-copy view in the storage dtype
+    when the buffer allows it, else a float64 copy.
+
+    The check is always on, because a malformed vector does not fail
+    by itself: ragged rows whose lengths total n·dim (63+65, …)
+    reshape misaligned, and a NaN or ±inf scores as a silently wrong
+    distance.  Raises ValueError naming the cause for null rows, any
+    row length ≠ dim (one C++ min/max over the lengths, no per-row
+    Python), null elements and non-finite values."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = len(col)
+    if col.null_count:
+        raise ValueError(f"{col.null_count} null vector row(s)")
+    if n:
+        mm = pc.min_max(pc.list_value_length(col))
+        lo, hi = mm["min"].as_py(), mm["max"].as_py()
+        if lo != dim or hi != dim:
+            raise ValueError(
+                f"vector length must be {dim}; row lengths span [{lo}, {hi}]"
+            )
+    flat = col.flatten()  # offset-aware view of the values buffer
+    if flat.null_count:
+        raise ValueError(f"{flat.null_count} null vector element(s)")
+    try:
+        m = flat.to_numpy(zero_copy_only=True)
+    except pa.ArrowInvalid:
+        m = flat.to_numpy(zero_copy_only=False).astype(np.float64)
+    m = m.reshape(n, dim)
+    if not np.isfinite(m).all():
+        raise ValueError("non-finite vector value(s) (NaN or ±inf)")
+    return m
+
+
+def _topk_batches(scored, k: int):
+    """Partition-local top-k of the cosine kernels: folds (ids, raw
+    cosines) pairs into a running k-cut and yields at most one
+    (vec_id, cosine) batch.  Scores quantize to 1e-6
+    half-away-from-zero like F.round (np.round is half-to-even) BEFORE
+    every cut, and the cut orders by (score desc, vec_id asc), so each
+    local winner set agrees with the global (rounded, vec_id) order
+    even at ties."""
+    import numpy as np
+    import pyarrow as pa
+
+    best_ids = np.empty(0, dtype=np.int64)
+    best_sims = np.empty(0, dtype=np.float64)
+    for ids, sims in scored:
+        sims = np.trunc(sims * 1e6 + np.copysign(0.5, sims)) / 1e6
+        best_ids = np.concatenate([best_ids, ids])
+        best_sims = np.concatenate([best_sims, sims])
+        if best_ids.size > k:
+            order = np.lexsort((best_ids, -best_sims))[:k]
+            best_ids, best_sims = best_ids[order], best_sims[order]
+    if best_ids.size:
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(best_ids, type=pa.int64()),
+                pa.array(best_sims, type=pa.float64()),
+            ],
+            ["vec_id", "cosine"],
+        )
+
+
 def arrow_topk_cosine(
     vecs: DataFrame, query: list[float], k: int = TOP_K,
     exclude_id: int | None = QUERY_VEC_ID,
@@ -141,8 +217,8 @@ def arrow_topk_cosine(
     re-boxes every element — measured 6.8× slower than DuckDB's
     native cosine at 2.4 M vectors with the matmul itself nearly
     free. Here the Arrow ListArray's flat values buffer maps straight
-    into a (n, dim) ndarray view (``flatten().to_numpy()``, no
-    per-row objects), so the kernel is one BLAS matvec per batch.
+    into a (n, dim) ndarray view (_arrow_matrix, no per-row objects),
+    so the kernel is one BLAS matvec per batch.
 
     Ship FLOAT, upcast in NumPy: ``vecs.v`` should stay the storage
     dtype (array<float>) — casting to array<double> JVM-side costs a
@@ -155,12 +231,10 @@ def arrow_topk_cosine(
     eliminating it needs a JVM-native vector kernel Spark doesn't
     have, not a better Python side.
 
-    Exactness contract (same as the mapInPandas predecessor): scores
-    quantize to 1e-6 half-away-from-zero BEFORE the local cut, so
-    partition-local winners agree with the global (rounded, vec_id)
-    order even at ties; each partition ships ≤ k rows into one
-    TakeOrderedAndProject. ``vecs`` must be (vec_id long, v
-    array<float|double>).
+    Exactness contract (same as the mapInPandas predecessor): the
+    _topk_batches quantize-then-cut, so each partition ships ≤ k rows
+    into one TakeOrderedAndProject. ``vecs`` must be (vec_id long, v
+    array<float|double>); a malformed vector raises (_arrow_matrix).
     """
     import numpy as np
     import pyarrow as pa
@@ -172,54 +246,24 @@ def arrow_topk_cosine(
     def local_topk(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         q = np.asarray(bq.value)
         qn = np.sqrt(q @ q)
-        best_ids = np.empty(0, dtype=np.int64)
-        best_sims = np.empty(0, dtype=np.float64)
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            ids = rb.column(0).to_numpy(zero_copy_only=False)
-            col = rb.column(1)
-            flat = col.flatten()  # offset-aware view of the values buffer
-            # Per-row length check, not just the sum: ragged rows whose
-            # lengths happen to total n*dim (63+65, …) would otherwise
-            # reshape misaligned and score silently wrong. One C++
-            # min/max over the lengths — still no per-row Python.
-            mm = pa.compute.min_max(pa.compute.list_value_length(col))
-            uniform = (
-                col.null_count == 0
-                and mm["min"].as_py() == len(q)
-                and mm["max"].as_py() == len(q)
-            )
-            if uniform and flat.null_count == 0:
-                m = flat.to_numpy(zero_copy_only=True).reshape(n, len(q))
-                if m.dtype != np.float64:
-                    m = m.astype(np.float64)  # exact float32→float64
-            else:  # ragged/null rows: fall back to per-row boxing
-                m = np.stack(col.to_pylist()).astype(np.float64)
-            if excl is not None:
-                keep = ids != excl
-                ids, m = ids[keep], m[keep]
-                if ids.size == 0:
+
+        def scored():
+            for rb in batches:
+                if rb.num_rows == 0:
                     continue
-            sims = (m @ q) / (np.sqrt(np.einsum("ij,ij->i", m, m)) * qn)
-            # quantize BEFORE pruning, half-away-from-zero like F.round
-            # (np.round is half-to-even) so local cuts match the
-            # global (rounded, vec_id) order at ties
-            sims = np.trunc(sims * 1e6 + np.copysign(0.5, sims)) / 1e6
-            best_ids = np.concatenate([best_ids, ids])
-            best_sims = np.concatenate([best_sims, sims])
-            if best_ids.size > k:
-                order = np.lexsort((best_ids, -best_sims))[:k]
-                best_ids, best_sims = best_ids[order], best_sims[order]
-        if best_ids.size:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(best_ids, type=pa.int64()),
-                    pa.array(best_sims, type=pa.float64()),
-                ],
-                ["vec_id", "cosine"],
-            )
+                ids = rb.column(0).to_numpy(zero_copy_only=False)
+                # exact float32→float64 upcast; no copy when already f64
+                m = _arrow_matrix(rb.column(1), len(q)).astype(
+                    np.float64, copy=False
+                )
+                if excl is not None:
+                    keep = ids != excl
+                    ids, m = ids[keep], m[keep]
+                    if ids.size == 0:
+                        continue
+                yield ids, (m @ q) / (np.sqrt(np.einsum("ij,ij->i", m, m)) * qn)
+
+        return _topk_batches(scored(), k)
 
     local = vecs.select(
         F.col("vec_id").cast("long").alias("vec_id"), "v"
@@ -341,150 +385,15 @@ def _embedding_shards(path: str) -> list[tuple[str, int]]:
     ]
 
 
-def shard_scan_topk_cosine(
-    spark: SparkSession,
-    parquet_path: str,
-    query: list[float],
-    k: int = TOP_K,
-    exclude_id: int | None = QUERY_VEC_ID,
-) -> DataFrame:
-    """Top-k cosine with the scan INSIDE the Python worker: Spark
-    distributes (file, row_group) shards, and each task reads its row
-    groups straight through pyarrow — column-pruned at the footer, the
-    FixedSizeList/List values buffer mapped zero-copy into a (n, dim)
-    NumPy view.  No vector ever crosses the JVM.
-
-    Why this exists: the r6 decomposition measured the JVM row→Arrow
-    bridge at 0.72 s of the 0.91 s kernel wall at 2.4 M×64 (scan 0.16,
-    math 0.19) — the serialization IS the floor for any
-    mapInArrow/mapInPandas formulation, because Spark's vectorized
-    parquet reader still feeds an InternalRow pipeline that the Arrow
-    writer re-columnarizes per batch.  Reading the column through
-    pyarrow in the task skips that entirely (the same direct-shard
-    pattern Petastorm/Ray datasets use over parquet).  It is still
-    Spark-scheduled — locality, retries, and the k-per-shard merge are
-    the engine's; only the innermost scan is delegated, exactly like a
-    DataSource the JVM doesn't have.  Trade-off vs arrow_topk_cosine:
-    no Catalyst pushdown INTO upstream operators (this is a leaf scan,
-    composable only by path), so the registry keeps both — the
-    DataFrame kernel for composition, this for the bench-critical
-    leaf-scan shape.
-
-    Determinism contract identical to arrow_topk_cosine: quantize to
-    1e-6 half-away-from-zero BEFORE every cut, (score desc, vec_id)
-    order, ≤k rows per shard into one TakeOrderedAndProject."""
-    import numpy as np
-    import pyarrow as pa
-
-    shards = _embedding_shards(parquet_path)
-    if not shards:
-        raise ValueError(f"no parquet shards under {parquet_path}")
-    par = spark.sparkContext.defaultParallelism
-    bq = spark.sparkContext.broadcast([float(x) for x in query])
-    excl = exclude_id
-
-    def scan_topk(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pq
-
-        q = np.asarray(bq.value)
-        qn = np.sqrt(q @ q)
-        dim = len(q)
-        best_ids = np.empty(0, dtype=np.int64)
-        best_sims = np.empty(0, dtype=np.float64)
-        pf_cache: dict[str, pq.ParquetFile] = {}
-        for rb in batches:
-            paths = rb.column(0).to_pylist()
-            rgs = rb.column(1).to_pylist()
-            for path, rg in zip(paths, rgs):
-                pf = pf_cache.get(path)
-                if pf is None:
-                    # memory_map: with the uncompressed plain layout the
-                    # row-group read is a zero-copy view of page cache
-                    pf = pf_cache[path] = pq.ParquetFile(
-                        path, memory_map=True
-                    )
-                t = pf.read_row_group(rg, columns=["vec_id", "embedding"])
-                n = t.num_rows
-                if n == 0:
-                    continue
-                ids = t.column(0).to_numpy(zero_copy_only=False).astype(
-                    np.int64, copy=False
-                )
-                col = t.column(1).combine_chunks()
-                flat = col.flatten()
-                mm = pa.compute.min_max(pa.compute.list_value_length(col))
-                uniform = (
-                    col.null_count == 0
-                    and mm["min"].as_py() == dim
-                    and mm["max"].as_py() == dim
-                )
-                if uniform and flat.null_count == 0:
-                    m = flat.to_numpy(zero_copy_only=True).reshape(n, dim)
-                    if m.dtype != np.float64:
-                        m = m.astype(np.float64)  # exact float32→float64
-                else:
-                    m = np.stack(col.to_pylist()).astype(np.float64)
-                if excl is not None:
-                    keep = ids != excl
-                    ids, m = ids[keep], m[keep]
-                    if ids.size == 0:
-                        continue
-                sims = (m @ q) / (np.sqrt(np.einsum("ij,ij->i", m, m)) * qn)
-                sims = np.trunc(sims * 1e6 + np.copysign(0.5, sims)) / 1e6
-                best_ids = np.concatenate([best_ids, ids])
-                best_sims = np.concatenate([best_sims, sims])
-                if best_ids.size > k:
-                    order = np.lexsort((best_ids, -best_sims))[:k]
-                    best_ids, best_sims = best_ids[order], best_sims[order]
-        if best_ids.size:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(best_ids, type=pa.int64()),
-                    pa.array(best_sims, type=pa.float64()),
-                ],
-                ["vec_id", "cosine"],
-            )
-
-    # parallelize() slices the shard list directly — one task per
-    # shard with NO repartition exchange (a whole extra stage + python
-    # worker round-trip measured ~0.5 s of fixed latency at any scale).
-    rdd = spark.sparkContext.parallelize(shards, min(len(shards), par))
-    tasks = spark.createDataFrame(rdd, "path string, rg int")
-    local = tasks.mapInArrow(scan_topk, _TOPK_SCHEMA)
-    return local.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(k)
-
-
-@register(
-    "l4b_shard_scan_topk",
-    oracle=f"""
-    SELECT vec_id, cosine FROM ({_ORACLE_COSINE_TO_QUERY})
-    ORDER BY cosine DESC, vec_id LIMIT {TOP_K}
-    """,
-    tags=("L4", "O4", "D3", "EXT"),
-)
-def l4b_shard_scan_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """l4's exact semantics on the row-group-sharded pyarrow scan path
-    (shard_scan_topk_cosine) — same oracle, same quantize-then-cut
-    determinism, zero JVM bridge.  The query vector loads driver-side
-    through one statistics-pruned pyarrow read (a point lookup over
-    footers, never a data scan)."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    query = _fetch_query_vector(path, QUERY_VEC_ID)
-    return shard_scan_topk_cosine(spark, path, query, TOP_K)
-
-
 # ---------------------------------------------------------------------------
 # Packed vector layout + two-phase exact kernel (l4c) — the r9 closure
 # of the vector-kernel gap.
 #
 # The r6 decomposition pinned the mapInArrow kernel's floor on the JVM
-# row→Arrow bridge; r7's bridge-free shard scan (l4b) was REFUTED
-# because pyarrow's list<float> page decode (dictionary-encoded,
-# per-element assembly) costs more than the bridge it avoids.  Both
+# row→Arrow bridge; r7's bridge-free pyarrow shard scan over the
+# list<float> column was REFUTED (and later retired) because pyarrow's
+# list<float> page decode (dictionary-encoded, per-element assembly)
+# costs more than the bridge it avoids.  Both
 # floors are artifacts of the STORAGE layout, not of Spark: a one-time
 # packed layout — each vector as one plain-encoded 256-byte binary
 # value plus its exact float64 norm — turns the page decode into a
@@ -528,8 +437,9 @@ def build_packed_vector_layout(
     vector's float32 values as one little-endian byte string (dim*4
     bytes); ``norm`` is its exact float64 L2 norm computed at pack
     time (same einsum the query kernel uses, so refine bits match).
-    Ragged or null vectors are REJECTED here — the layout carries a
-    uniform-dim guarantee so the scan path never needs a fallback.
+    Malformed vectors are REJECTED here (_arrow_matrix) — the layout
+    carries a uniform-dim guarantee so the scan path never needs a
+    fallback.
     Idempotent via a _DONE marker; returns the layout directory."""
     import os
 
@@ -568,24 +478,9 @@ def build_packed_vector_layout(
             if n == 0:
                 continue
             ids = rb.column(0)
-            col = rb.column(1)
-            mm = pa.compute.min_max(pa.compute.list_value_length(col))
-            if (
-                col.null_count
-                or mm["min"].as_py() != dim
-                or mm["max"].as_py() != dim
-            ):
-                raise ValueError(
-                    "packed layout requires null-free uniform "
-                    f"{dim}-dim vectors; got lengths "
-                    f"[{mm['min']}, {mm['max']}], "
-                    f"nulls={col.null_count}"
-                )
-            flat = col.flatten()
-            if flat.null_count:
-                raise ValueError("null elements inside vectors")
-            m = flat.to_numpy(zero_copy_only=False).reshape(n, dim)
-            m32 = np.ascontiguousarray(m, dtype=np.float32)
+            m32 = np.ascontiguousarray(
+                _arrow_matrix(rb.column(1), dim), dtype=np.float32
+            )
             m64 = m32.astype(np.float64)  # exact
             norms = np.sqrt(np.einsum("ij,ij->i", m64, m64))
             offsets = pa.py_buffer(
@@ -647,13 +542,16 @@ def packed_topk_cosine(
         q64 = np.asarray(bq.value, dtype=np.float64)
         qn = np.sqrt(q64 @ q64)
         q32 = q64.astype(np.float32)
-        best_ids = np.empty(0, dtype=np.int64)
-        best_sims = np.empty(0, dtype=np.float64)
         pf_cache: dict[str, pq.ParquetFile] = {}
-        for rb in batches:
-            for path, rg in zip(
-                rb.column(0).to_pylist(), rb.column(1).to_pylist()
-            ):
+
+        def row_groups():
+            for rb in batches:
+                yield from zip(
+                    rb.column(0).to_pylist(), rb.column(1).to_pylist()
+                )
+
+        def scored():
+            for path, rg in row_groups():
                 pf = pf_cache.get(path)
                 if pf is None:
                     # memory_map: with the uncompressed plain layout the
@@ -698,21 +596,9 @@ def packed_topk_cosine(
                 m64 = m32[cand].astype(np.float64)  # exact upcast
                 # phase 2: exact float64 refine — same op order as
                 # arrow_topk_cosine (norms are the pack-time einsum)
-                sims = (m64 @ q64) / (norms[cand] * qn)
-                sims = np.trunc(sims * 1e6 + np.copysign(0.5, sims)) / 1e6
-                best_ids = np.concatenate([best_ids, cids])
-                best_sims = np.concatenate([best_sims, sims])
-                if best_ids.size > k:
-                    order = np.lexsort((best_ids, -best_sims))[:k]
-                    best_ids, best_sims = best_ids[order], best_sims[order]
-        if best_ids.size:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(best_ids, type=pa.int64()),
-                    pa.array(best_sims, type=pa.float64()),
-                ],
-                ["vec_id", "cosine"],
-            )
+                yield cids, (m64 @ q64) / (norms[cand] * qn)
+
+        return _topk_batches(scored(), k)
 
     rdd = spark.sparkContext.parallelize(shards, min(len(shards), par))
     tasks = spark.createDataFrame(rdd, "path string, rg int")
@@ -1052,6 +938,30 @@ def _with_recall(
     return res.join(F.broadcast(rec))
 
 
+def _nearest_centroid(X, C):
+    """Row index into ``C`` of each row of ``X``'s nearest centroid —
+    the assignment step shared by every Lloyd kernel.
+
+    Bit-exactness contract (the l20/l21/l21b oracles track codebooks
+    bit-for-bit): d2 is folded over positions IN ORDER (acc + (x-c)²,
+    one IEEE add/sub/mul chain — identical to the JVM
+    aggregate(zip_with(...)) left fold these kernels replaced), and
+    argmin takes the FIRST minimum (centroids ordered by ascending cid
+    ⇒ ties to the lower cid, min_by(struct(d2, cid)) semantics)."""
+    import numpy as np
+
+    n, k = X.shape[0], C.shape[0]
+    D = np.empty((n, k), dtype=np.float64)
+    for ci in range(k):
+        acc = np.zeros(n, dtype=np.float64)
+        crow = C[ci]
+        for j in range(C.shape[1]):  # in-order fold = JVM aggregate()
+            d = X[:, j] - crow[j]
+            acc = acc + d * d
+        D[:, ci] = acc
+    return np.argmin(D, axis=1)  # first min = lowest cid
+
+
 def _lloyd_update_fn(cent_blocks, dim: int, dsub: int):
     """mapInArrow kernel factory: one Lloyd assignment + partial-update
     pass over (v: array<double>) batches.  ``cent_blocks`` is a list
@@ -1060,12 +970,7 @@ def _lloyd_update_fn(cent_blocks, dim: int, dsub: int):
     cnt) where qsum is the exact int64 sum of quantize9(x) over the
     rows assigned to (block, cid) — the davg9 numerator, exactly.
 
-    Bit-exactness contract (the l20/l21/l21b oracles track codebooks
-    bit-for-bit): d2 is folded over positions IN ORDER (acc + (x-c)²,
-    one IEEE add/sub/mul chain — identical to the JVM
-    aggregate(zip_with(...)) left fold this kernel replaced), argmin
-    takes the FIRST minimum (centroids ordered by ascending cid ⇒ ties
-    to the lower cid, min_by(struct(d2, cid)) semantics), and the
+    Bit-exact: the assignment is _nearest_centroid, and the
     quantization is trunc(x·1e9 ± 0.5) toward zero (int64 cast), the
     _quantize9 algebra.  int64 partial sums are order-independent, so
     the update is deterministic under any partitioning."""
@@ -1087,23 +992,13 @@ def _lloyd_update_fn(cent_blocks, dim: int, dsub: int):
             if n == 0:
                 continue
             seen = True
-            X = lv.flatten().to_numpy(zero_copy_only=False).reshape(n, dim)
+            X = _arrow_matrix(lv, dim)
             y = X * 1e9
             Q = (y + np.where(y >= 0, 0.5, -0.5)).astype(np.int64)
             for b, (cids, C) in enumerate(CB):
-                Xb = X[:, b * dsub : (b + 1) * dsub]
-                k = C.shape[0]
-                D = np.empty((n, k), dtype=np.float64)
-                for ci in range(k):
-                    acc = np.zeros(n, dtype=np.float64)
-                    crow = C[ci]
-                    for j in range(dsub):  # in-order fold = JVM aggregate()
-                        d = Xb[:, j] - crow[j]
-                        acc = acc + d * d
-                    D[:, ci] = acc
-                lab = np.argmin(D, axis=1)  # first min = lowest cid
+                lab = _nearest_centroid(X[:, b * dsub : (b + 1) * dsub], C)
                 Qb = Q[:, b * dsub : (b + 1) * dsub]
-                for ci in range(k):
+                for ci in range(C.shape[0]):
                     m = lab == ci
                     c = int(m.sum())
                     if c:
@@ -1137,9 +1032,9 @@ def _lloyd_update_fn(cent_blocks, dim: int, dsub: int):
 
 def _lloyd_assign_fn(cent_blocks, dim: int, dsub: int):
     """mapInArrow kernel factory: assignment-only pass over
-    (vec_id, v) batches → (vec_id, block, code) rows.  Same d2 fold
-    order and first-min tie-break as _lloyd_update_fn, so the emitted
-    codes are bit-identical to the JVM min_by assignment."""
+    (vec_id, v) batches → (vec_id, block, code) rows.  The assignment
+    is _nearest_centroid, so the emitted codes are bit-identical to
+    the JVM min_by assignment."""
 
     def fn(batches):
         import numpy as np
@@ -1155,20 +1050,10 @@ def _lloyd_assign_fn(cent_blocks, dim: int, dsub: int):
             n = len(lv)
             if n == 0:
                 continue
-            X = lv.flatten().to_numpy(zero_copy_only=False).reshape(n, dim)
+            X = _arrow_matrix(lv, dim)
             out_b, out_code = [], []
             for b, (cids, C) in enumerate(CB):
-                Xb = X[:, b * dsub : (b + 1) * dsub]
-                k = C.shape[0]
-                D = np.empty((n, k), dtype=np.float64)
-                for ci in range(k):
-                    acc = np.zeros(n, dtype=np.float64)
-                    crow = C[ci]
-                    for j in range(dsub):
-                        d = Xb[:, j] - crow[j]
-                        acc = acc + d * d
-                    D[:, ci] = acc
-                lab = np.argmin(D, axis=1)
+                lab = _nearest_centroid(X[:, b * dsub : (b + 1) * dsub], C)
                 out_b.append(np.full(n, b, dtype=np.int32))
                 out_code.append(cids[lab])
             id_arr = ids if len(CB) == 1 else pa.concat_arrays([ids] * len(CB))
@@ -1187,10 +1072,10 @@ def _lloyd_assign_fn(cent_blocks, dim: int, dsub: int):
 def _lloyd_assign_residual_fn(cent_blocks, dim: int):
     """mapInArrow kernel factory for the IVFADC index build: one pass
     over (vec_id, v) batches → (vec_id, cid, rv) where cid is the
-    nearest coarse centroid (same fold order / tie-break as
-    _lloyd_update_fn) and rv = v − c(v), the elementwise IEEE subtract
-    the JVM zip_with(v, cv, x − c) performed — bit-identical residuals
-    without the broadcast-join + argmin-groupBy + residual-join chain."""
+    nearest coarse centroid (_nearest_centroid) and rv = v − c(v), the
+    elementwise IEEE subtract the JVM zip_with(v, cv, x − c) performed
+    — bit-identical residuals without the broadcast-join +
+    argmin-groupBy + residual-join chain."""
 
     def fn(batches):
         import numpy as np
@@ -1199,23 +1084,14 @@ def _lloyd_assign_residual_fn(cent_blocks, dim: int):
         cids, C = cent_blocks[0]
         cids = np.asarray(cids, dtype=np.int32)
         C = np.asarray(C, dtype=np.float64)
-        k = C.shape[0]
         for batch in batches:
             ids = batch.column(0)
             lv = batch.column(1)
             n = len(lv)
             if n == 0:
                 continue
-            X = lv.flatten().to_numpy(zero_copy_only=False).reshape(n, dim)
-            D = np.empty((n, k), dtype=np.float64)
-            for ci in range(k):
-                acc = np.zeros(n, dtype=np.float64)
-                crow = C[ci]
-                for j in range(dim):
-                    d = X[:, j] - crow[j]
-                    acc = acc + d * d
-                D[:, ci] = acc
-            lab = np.argmin(D, axis=1)
+            X = _arrow_matrix(lv, dim)
+            lab = _nearest_centroid(X, C)
             R = X - C[lab]  # elementwise IEEE, == zip_with(v, cv, x - c)
             offsets = pa.array(
                 np.arange(0, (n + 1) * dim, dim, dtype=np.int32)
@@ -1238,12 +1114,13 @@ def _lloyd_reduce(partial_rows, cent_blocks):
     sum(long).cast(double) / (count · lit(1e9)) performs.  Clusters
     with zero assigned rows drop out, as the grouped-mean update did."""
     acc: dict[tuple[int, int], list] = {}
-    dsub = None
     for r in partial_rows:
         key = (r["block"], r["cid"])
         if key not in acc:
             acc[key] = [{}, 0]
         acc[key][0][r["pos"]] = acc[key][0].get(r["pos"], 0) + r["qsum"]
+        # every pos row of a partial repeats its cluster's count; read
+        # it from the pos == 0 row only, so each partial counts once
         if r["pos"] == 0:
             acc[key][1] += r["cnt"]
     out = []
@@ -1292,6 +1169,8 @@ def kmeans_fit(
     spark = vecs.sparkSession
     vecs = vecs.select("vec_id", "v")
     init = vecs.orderBy("vec_id").limit(k).collect()
+    if not init:
+        raise ValueError("no vectors to fit")
     init = sorted(init, key=lambda r: r["vec_id"])
     dim = len(init[0]["v"])
     cent_blocks = [(
@@ -1485,6 +1364,8 @@ def pq_train_encode(vecs: DataFrame) -> tuple[DataFrame, DataFrame]:
         vecs.orderBy("vec_id").limit(PQ_K).collect(),
         key=lambda r: r["vec_id"],
     )
+    if not init:
+        raise ValueError("no vectors to fit")
     dim = len(init[0]["v"])
     dsub = dim // PQ_BLOCKS
     cent_blocks = [

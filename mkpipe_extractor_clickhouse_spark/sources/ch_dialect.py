@@ -19,7 +19,8 @@ Supported rewrites
   ``arrayJoin``→``explode``, ``has``→``array_contains``,
   ``toStartOfDay/Hour/Month``→``date_trunc(...)``,
   ``toUnixTimestamp``→``unix_timestamp``, ``today``→``current_date``,
-  ``now``→``current_timestamp``, ``toInt*/toFloat*/toString``→casts.
+  ``now``→``current_timestamp``, ``count()``→``count(*)``,
+  ``toInt*/toFloat*/toString``→casts.
 * conditional combinators with argument surgery (paren-aware):
   ``countIf(c)``→``count_if(c)``,
   ``sumIf/avgIf/minIf/maxIf(x, c)``→``agg(CASE WHEN c THEN x END)``.
@@ -369,6 +370,9 @@ def _translate_functions(sql: str) -> str:
         flags=re.IGNORECASE,
     )
     out = re.sub(r"\bnow\s*\(\s*\)", "current_timestamp()", out, flags=re.IGNORECASE)
+    # bare count() is ClickHouse's row count; Spark rejects the
+    # zero-argument call (WRONG_NUM_ARGS)
+    out = re.sub(r"\bcount\s*\(\s*\)", "count(*)", out, flags=re.IGNORECASE)
 
     # parameterized aggregates before plain renames (quantile vs quantileExact)
     out = _rewrite_parameterized(

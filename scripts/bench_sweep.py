@@ -47,13 +47,7 @@ def main() -> int:
     n_out: dict[str, int] = {}
     errors: dict[str, str] = {}
     specs = all_specs()
-    # l4b_shard_scan_topk stays registered (strict-matched) as the
-    # documented refuted alternative (r7: pyarrow list<float> decode
-    # costs more than the JVM bridge it avoids — 11.87x at 9.6M), but
-    # it is retired from sweep/suite totals so the artifact's total
-    # reflects the kernels a user would actually run (l4 / l4c).
-    RETIRED = {"l4b_shard_scan_topk"}
-    names = args.names or sorted(set(specs) - RETIRED)
+    names = args.names or sorted(specs)
     oneshot: dict[str, float] = {}
     for name in names:
         try:

@@ -45,6 +45,20 @@ def test_count_if_and_sum_if(spark):
     )
 
 
+def test_bare_count_is_row_count(spark):
+    # ClickHouse's zero-argument count() counts rows; Spark rejects
+    # the bare call, so it must reach Spark as count(*)
+    _same(
+        spark,
+        """SELECT event_type, count() AS n, COUNT( ) AS m,
+                  countIf(value > 100) AS big
+           FROM events GROUP BY event_type""",
+        """SELECT event_type, count(*) AS n, count(*) AS m,
+                  count_if(value > 100) AS big
+           FROM events GROUP BY event_type""",
+    )
+
+
 def test_min_max_if_nested_parens(spark):
     # nested function calls + commas inside the condition must split
     # on TOP-LEVEL commas only

@@ -3,6 +3,8 @@ hash-dependent paths must agree with their exact counterparts."""
 
 from __future__ import annotations
 
+import pytest
+
 from mkpipe_extractor_clickhouse_spark.operators import multimodal
 from mkpipe_extractor_clickhouse_spark.registry import all_specs
 
@@ -553,35 +555,91 @@ def test_simhash_pairs_equal_bruteforce_hamming_join(spark, sf_dir):
     assert got  # non-degenerate fixture: some near pairs exist
 
 
-def test_arrow_kernel_rejects_ragged_rows_summing_to_dim(spark):
-    """The zero-copy reshape guard must validate PER-ROW lengths, not
-    just the flat total: a batch of 3-dim and 5-dim vectors sums to
-    2*4 and would silently reshape misaligned (wrong cosines) under a
-    sum-only check. With per-row validation the kernel takes the
-    boxing fallback, which fails LOUDLY on genuinely ragged input —
-    never a silently wrong score."""
-    import pytest
+_NAN, _INF = float("nan"), float("inf")
+_OK4 = [0.0, 1.0, 0.0, 0.0]
 
+
+@pytest.mark.parametrize(
+    "rows, cause",
+    [
+        pytest.param([(1, None), (2, _OK4)], "null vector row", id="null_row"),
+        # 3 + 5 = 2*4: a sum-only check would reshape these misaligned
+        pytest.param(
+            [(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0, 0.0])],
+            "vector length must be 4",
+            id="ragged_sums_to_dim",
+        ),
+        pytest.param(
+            [(1, [1.0, None, 0.0, 0.0]), (2, _OK4)],
+            "null vector element",
+            id="null_element",
+        ),
+        pytest.param([(1, [_NAN, 0.0, 0.0, 0.0]), (2, _OK4)], "non-finite", id="nan"),
+        pytest.param([(1, [_INF, 0.0, 0.0, 0.0]), (2, _OK4)], "non-finite", id="inf"),
+        pytest.param([(1, [-_INF, 0.0, 0.0, 0.0]), (2, _OK4)], "non-finite", id="neg_inf"),
+    ],
+)
+def test_arrow_kernel_rejects_malformed_vectors(spark, rows, cause):
+    """The vector boundary (_arrow_matrix) raises a ValueError naming
+    the cause for every malformed input — never a silently wrong
+    score, never an opaque reshape or boxing error — both called
+    directly and from inside the arrow_topk_cosine kernel."""
+    import pyarrow as pa
+
+    from mkpipe_extractor_clickhouse_spark.operators.llm_similarity import (
+        _arrow_matrix,
+        arrow_topk_cosine,
+    )
+
+    col = pa.array([v for _, v in rows], type=pa.list_(pa.float32()))
+    with pytest.raises(ValueError, match=cause):
+        _arrow_matrix(col, 4)
+    vecs = spark.createDataFrame(rows, "vec_id long, v array<float>").coalesce(1)
+    with pytest.raises(Exception) as exc:
+        arrow_topk_cosine(vecs, [1.0, 0.0, 0.0, 0.0], k=2, exclude_id=None).collect()
+    assert "ValueError" in str(exc.value) and cause in str(exc.value)
+
+
+def test_arrow_kernel_accepts_uniform_rows(spark):
+    """Uniform rows of the query's dim flow through the zero-copy
+    path and score exactly."""
     from mkpipe_extractor_clickhouse_spark.operators.llm_similarity import (
         arrow_topk_cosine,
     )
 
-    ragged = spark.createDataFrame(
-        [(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0, 0.0])],
-        "vec_id long, v array<float>",
-    ).coalesce(1)
-    with pytest.raises(Exception):
-        arrow_topk_cosine(ragged, [1.0, 0.0, 0.0, 0.0], k=2,
-                          exclude_id=None).collect()
-    # uniform rows of the query's dim still flow through zero-copy
     ok = spark.createDataFrame(
-        [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0])],
-        "vec_id long, v array<float>",
+        [(1, [1.0, 0.0, 0.0, 0.0]), (2, _OK4)], "vec_id long, v array<float>"
     ).coalesce(1)
     rows = arrow_topk_cosine(ok, [1.0, 0.0, 0.0, 0.0], k=2,
                              exclude_id=None).collect()
     assert [r.vec_id for r in rows] == [1, 2]
     assert rows[0].cosine == 1.0
+
+
+def test_kmeans_rejects_ragged_vectors(spark):
+    """A ragged vector past the k init rows reaches the Lloyd kernel,
+    which raises through the vector boundary instead of reshaping the
+    batch misaligned (3 + 5 dims sum to 2*4)."""
+    from mkpipe_extractor_clickhouse_spark.operators.llm_similarity import (
+        kmeans_fit,
+    )
+
+    rows = [(i, [float(i), 0.0, 1.0, 0.0]) for i in range(1, 7)]
+    rows += [(7, [1.0, 0.0, 0.0]), (8, [0.0, 1.0, 0.0, 0.0, 0.0])]
+    vecs = spark.createDataFrame(rows, "vec_id long, v array<double>").coalesce(1)
+    with pytest.raises(Exception, match="vector length must be 4"):
+        kmeans_fit(vecs, k=2, max_iter=1)
+
+
+@pytest.mark.parametrize("fit", ["kmeans_fit", "pq_train_encode"])
+def test_codebook_training_rejects_empty_input(spark, fit):
+    """Codebook training raises a named ValueError on an empty corpus,
+    not an IndexError on the missing init rows."""
+    from mkpipe_extractor_clickhouse_spark.operators import llm_similarity
+
+    empty = spark.createDataFrame([], "vec_id long, v array<double>")
+    with pytest.raises(ValueError, match="no vectors to fit"):
+        getattr(llm_similarity, fit)(empty)
 
 
 def test_sniffer_riff_requires_wave_tag():

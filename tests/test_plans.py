@@ -858,9 +858,9 @@ def test_headline_builders_do_not_pin(spark, sf_dir, monkeypatch):
     real = _cache.ephemeral_cache.__wrapped__ if hasattr(
         _cache.ephemeral_cache, "__wrapped__") else _cache.ephemeral_cache
 
-    def spy(df):
+    def spy(df, **kw):
         calls.append("pin")
-        return real(df)
+        return real(df, **kw)
 
     # every operator module imported the symbol by name, so patch it
     # everywhere it was re-exported
