@@ -31,7 +31,7 @@ from pyspark.sql import types as T
 from ..catalog import load_table
 from ..registry import register
 from ._cache import ephemeral_cache
-from .graph import connected_components
+from .graph import component_minima
 from .llm_similarity import _arrow_matrix
 
 JACCARD_T = 0.9
@@ -113,22 +113,13 @@ def l2_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal to the uncollapsed form by the unchanged naive oracle. The
     collapse is ADAPTIVE (_collapse_pays on the set key): on an
     effectively set-distinct corpus the direct join is cheaper."""
-    d = load_table(spark, sf_dir, "documents")
-    set_key = F.md5(
-        F.concat_ws(" ", F.array_sort(F.array_distinct(F.split("text", " "))))
-    )
-    if not _collapse_pays(d, sf_dir, key=set_key, tag="tokenset"):
+    collapsed = _tokenset_collapse(spark, sf_dir)
+    if collapsed is None:
         verified = ppjoin_pairs(_doc_tokens(spark, sf_dir), JACCARD_T)
         return verified.select(
             "doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard")
         )
-    m = d.select("doc_id", set_key.alias("h"))
-    groups = m.groupBy("h").agg(F.min("doc_id").alias("rep"))
-    mem = m.join(groups, "h").select("doc_id", "rep")
-    rep_tokens = _doc_tokens(spark, sf_dir).join(
-        groups.select(F.col("rep").alias("doc_id")), "doc_id"
-    )
-    rp = ppjoin_pairs(rep_tokens, JACCARD_T)
+    mem, rp = collapsed
     cross = (
         rp.join(
             mem.select(F.col("rep").alias("doc_a"), F.col("doc_id").alias("ma")),
@@ -160,6 +151,33 @@ def l2_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cross.unionAll(within).select(
         "doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard")
     )
+
+
+def _tokenset_collapse(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame] | None:
+    """The token-set collapse shared by l2 and l18: ``(mem, rp)`` when
+    _collapse_pays on the canonical token set, else None (callers run
+    ppjoin_pairs on the documents directly).
+
+    ``mem``: (doc_id, rep) for every document, rep = the min doc_id of
+    its token-set group. ``rp``: the PPJoin pairs (doc_a < doc_b,
+    jaccard) among the reps only. The canonical token set is the
+    sorted distinct tokens joined by the split delimiter — a bijective
+    rendering, so md5 of it is an exact set identity."""
+    d = load_table(spark, sf_dir, "documents")
+    set_key = F.md5(
+        F.concat_ws(" ", F.array_sort(F.array_distinct(F.split("text", " "))))
+    )
+    if not _collapse_pays(d, sf_dir, key=set_key, tag="tokenset"):
+        return None
+    m = d.select("doc_id", set_key.alias("h"))
+    groups = m.groupBy("h").agg(F.min("doc_id").alias("rep"))
+    mem = m.join(groups, "h").select("doc_id", "rep")
+    rep_tokens = _doc_tokens(spark, sf_dir).join(
+        groups.select(F.col("rep").alias("doc_id")), "doc_id"
+    )
+    return mem, ppjoin_pairs(rep_tokens, JACCARD_T)
 
 
 _COLLAPSE_PROBE_CACHE: dict[tuple, bool] = {}
@@ -1153,22 +1171,36 @@ def l18_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     step that turns pairwise matches into keep-one-per-cluster dedup
     decisions.
 
-    Spark side: large-star/small-star alternation (public Kiveris et
-    al. SoCC'14 MR-CC algorithm, operators/graph.py) — O(log² n)
-    rounds regardless of component diameter, so deep chain components
-    converge where plain label propagation would need diameter rounds.
-    The DuckDB oracle computes the same components by recursive
-    reachability, so the iterative result is verified exactly."""
-    # checkpoint: the Jaccard join is the dominant cost and feeds two
-    # union branches — without this it executes twice
-    pairs = ephemeral_cache(
-        l2_jaccard_neardup(spark, sf_dir).select("doc_a", "doc_b")
+    Components need connectivity only, not l2's pair list. When the
+    token-set collapse pays (_tokenset_collapse, shared with l2) the
+    graph is the rep-level PPJoin pairs alone (sf0.1 fixture: 28,865
+    edges instead of l2's 964,854 clique-expanded member pairs), and
+    each member takes its rep's label: equal-set docs are one node of
+    the graph, and the min doc_id of a component is the min of its
+    reps, because each rep is its group's min doc_id. Otherwise every
+    doc is its own rep and the graph is the direct ppjoin_pairs edges.
+
+    Spark side: partition-local union-find contraction, then
+    large-star/small-star rounds until the edges form a star forest
+    (operators/graph.py) — O(log² n) rounds regardless of component
+    diameter, so deep chain components converge where plain label
+    propagation would need diameter rounds. The DuckDB oracle computes
+    the same components by recursive reachability over l2's pairs, so
+    the iterative result is verified exactly."""
+    collapsed = _tokenset_collapse(spark, sf_dir)
+    if collapsed is None:
+        pairs = ppjoin_pairs(_doc_tokens(spark, sf_dir), JACCARD_T)
+        mem = load_table(spark, sf_dir, "documents").select(
+            "doc_id", F.col("doc_id").alias("rep")
+        )
+    else:
+        mem, pairs = collapsed
+    roots = component_minima(
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     )
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("id")
+    return mem.join(roots, mem["rep"] == roots["u"], "left").select(
+        "doc_id", F.coalesce(F.col("m"), F.col("rep")).alias("cluster_id")
     )
-    edges = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-    return connected_components(docs, edges)
 
 
 NGRAM_T = 0.5  # 3-gram shingles separate cleanly: fixture pairs are >=0.5 or <0.1
@@ -3079,10 +3111,12 @@ def l114_dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup clusters (l18's relation), which is what the keep/drop
     decision actually acts on.
 
-    Spark side reuses l18's large-star/small-star components (O(log²n)
-    rounds, diameter-free) and adds two tiny aggregations; the oracle
-    re-derives components by recursive reachability, so the iterative
-    algorithm's sizes are verified exactly."""
+    Spark side reuses l18's components (collapsed rep-level edge set,
+    partition-local contraction, then large-star/small-star rounds to
+    a star forest: O(log²n) rounds, diameter-free) and adds two tiny
+    aggregations; the oracle re-derives components by recursive
+    reachability, so the iterative algorithm's sizes are verified
+    exactly."""
     clusters = l18_dedup_clusters(spark, sf_dir)
     csize = clusters.groupBy("cluster_id").agg(
         F.count("*").alias("cluster_size")

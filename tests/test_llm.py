@@ -301,6 +301,106 @@ def test_connected_components_two_components_and_order(spark):
     assert out == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 3, 6: 6, 7: 3}
 
 
+def _cc_with_rounds(nodes, edges, caplog):
+    """(labels, star rounds run) of one connected_components call; the
+    round count comes from the module logger's one line per call."""
+    import logging
+
+    from mkpipe_extractor_clickhouse_spark.operators import graph
+
+    caplog.clear()
+    with caplog.at_level(logging.INFO, logger=graph.__name__):
+        out = graph.connected_components(nodes, edges).collect()
+    (rec,) = [r for r in caplog.records if r.name == graph.__name__]
+    return {r["doc_id"]: r["cluster_id"] for r in out}, rec.args[0]
+
+
+def test_connected_components_string_ids(spark, caplog):
+    """er1's case: string node ids, ordered bytewise like Spark orders
+    them, spread over several partitions."""
+    nodes = spark.createDataFrame([(s,) for s in ["b", "a", "ab", "B", "z", "é", "q"]], ["id"])
+    edges = spark.createDataFrame(
+        [("z", "ab"), ("ab", "b"), ("é", "q"), ("B", "é")], ["u", "v"]
+    ).repartition(3)
+    labels, _ = _cc_with_rounds(nodes, edges, caplog)
+    assert labels == {
+        "a": "a", "ab": "ab", "b": "ab", "z": "ab", "B": "B", "é": "B", "q": "B",
+    }
+
+
+def test_connected_components_round_robin_chain_runs_rounds(spark, caplog):
+    """A chain whose edges are dealt round-robin over 8 partitions: no
+    partition holds two adjacent edges, so contraction leaves a path
+    (not a star forest) and star rounds must finish the job."""
+    from pyspark.sql import functions as F
+
+    n = 64
+    nodes = spark.range(n).toDF("id")
+    edges = (
+        spark.range(n - 1).toDF("u").select("u", (F.col("u") + 1).alias("v"))
+        .repartition(8)
+    )
+    labels, rounds = _cc_with_rounds(nodes, edges, caplog)
+    assert labels == {i: 0 for i in range(n)}
+    assert rounds >= 1
+
+
+def test_connected_components_star_forest_runs_no_round(spark, caplog):
+    """An input that already is a star forest (either orientation) is
+    the fixed point: the stop test passes before any round."""
+    nodes = spark.range(10).toDF("id")
+    edges = spark.createDataFrame(
+        [(1, 0), (0, 2), (3, 0), (5, 4), (4, 6)], ["u", "v"]
+    ).coalesce(1)
+    labels, rounds = _cc_with_rounds(nodes, edges, caplog)
+    assert labels == {0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 4, 6: 4, 7: 7, 8: 8, 9: 9}
+    assert rounds == 0
+
+
+@pytest.mark.parametrize("rows", [[], [(2, 2), (5, 5)]], ids=["no_rows", "self_loops"])
+def test_connected_components_no_real_edges(spark, caplog, rows):
+    """No edges, or only self-loops: every node labels itself."""
+    nodes = spark.range(6).toDF("id")
+    edges = spark.createDataFrame(rows, "u long, v long")
+    labels, rounds = _cc_with_rounds(nodes, edges, caplog)
+    assert labels == {i: i for i in range(6)}
+    assert rounds == 0
+
+
+def test_connected_components_empty_partitions(spark, caplog):
+    """Partitions that receive zero rows yield nothing from the
+    contraction kernel; the rest still contract correctly."""
+    nodes = spark.range(6).toDF("id")
+    edges = spark.createDataFrame([(4, 1), (3, 4)], ["u", "v"]).repartition(8)
+    assert edges.rdd.glom().map(len).filter(lambda k: k == 0).count() > 0
+    labels, _ = _cc_with_rounds(nodes, edges, caplog)
+    assert labels == {0: 0, 1: 1, 2: 2, 3: 1, 4: 1, 5: 5}
+
+
+def test_union_find_matches_reference():
+    """The vectorized union-find kernel against a plain per-edge
+    union-find loop on random graphs: same min-index root per node."""
+    import numpy as np
+
+    from mkpipe_extractor_clickhouse_spark.operators.graph import _union_find
+
+    rng = np.random.default_rng(7)
+    for n, m in [(1, 0), (50, 30), (200, 400), (500, 100)]:
+        a = rng.integers(0, n, m)
+        b = rng.integers(0, n, m)
+        ref = list(range(n))
+
+        def find(x):
+            while ref[x] != x:
+                x = ref[x]
+            return x
+
+        for x, y in zip(a.tolist(), b.tolist()):
+            rx, ry = find(x), find(y)
+            ref[max(rx, ry)] = min(rx, ry)
+        assert _union_find(a, b, n).tolist() == [find(x) for x in range(n)]
+
+
 def test_pq_topk_recall(spark, sf_dir):
     """PQ-ADC candidates + exact re-rank must recover at least half of
     the exact top-k. Uniformly random embeddings are PQ's adversarial
@@ -1001,9 +1101,10 @@ def test_jaccard_family_collapse_path_on_duplicated_corpus(spark, sf_dir, tmp_pa
     """r10 rep-collapse: the fixtures are ~dup-free, so the adaptive
     collapse path (_collapse_pays) never fires in the registry runs.
     Exercise it against a corpus where 3 of 4 docs are exact copies:
-    l2/l71/l81 must hash-match their (unchanged, naive) oracles with
-    the collapse ACTIVE — pair expansion, within-group emission, and
-    l81's arithmetic count recovery are all on the line here."""
+    l2/l18/l71/l81 must hash-match their (unchanged, naive) oracles
+    with the collapse ACTIVE — pair expansion, within-group emission,
+    l18's rep-level edge set and l81's arithmetic count recovery are
+    all on the line here."""
     import duckdb
     from pyspark.sql import functions as F
 
@@ -1034,6 +1135,7 @@ def test_jaccard_family_collapse_path_on_duplicated_corpus(spark, sf_dir, tmp_pa
     specs = all_specs()
     for name in (
         "l2_jaccard_neardup",
+        "l18_dedup_clusters",
         "l71_shingle_containment",
         "l81_dedup_threshold_sweep",
     ):
@@ -1052,6 +1154,19 @@ def test_jaccard_family_collapse_path_on_duplicated_corpus(spark, sf_dir, tmp_pa
                 else:
                     assert gv == wv, (name, g, w)
     con.close()
+
+
+def test_collapse_probe_memo_stores_only_bools(spark, sf_dir):
+    """The one build-time memo caches the collapse DECISION, never data:
+    after l18 (which reaches _collapse_pays through _tokenset_collapse)
+    it holds one bool per (documents file fingerprint, collapse key)."""
+    from mkpipe_extractor_clickhouse_spark.operators import llm_dedup
+
+    llm_dedup._COLLAPSE_PROBE_CACHE.clear()
+    llm_dedup.l18_dedup_clusters(spark, sf_dir)
+    memo = dict(llm_dedup._COLLAPSE_PROBE_CACHE)
+    assert list(memo) == [(llm_dedup._documents_fingerprint(sf_dir), "tokenset")]
+    assert all(type(v) is bool for v in memo.values())
 
 
 def test_cdc_oracle_multibyte_parity():
